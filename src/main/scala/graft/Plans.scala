@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspection: print formatted physical plans for selected queries —
   * the tool used to keep scans pruned, joins broadcast, and codegen spans
   * wide. Usage: sbt "runMain graft.Plans [sfDir] [query ...]" */
@@ -11,14 +9,7 @@ object Plans {
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("q01_pricing_agg", "q02_dedup_keepfirst", "q04_join_resolve",
         "q08_merge_upsert", "q22_cosine_topk")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = Session.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,16 +9,6 @@ object Verify {
     // iteration aid; the driver always runs the full set)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS) which Spark 4 rejects by
-      // default; read as long (ns since epoch) and convert in the queries.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
     // SPARK_GRAFT_ADVERSE=1: hostile physical-planner settings — results
     // must be IDENTICAL (correctness may not depend on exchange reuse,
     // auto-broadcast size estimates, AQE coalescing geometry, input
@@ -29,26 +18,21 @@ object Verify {
     // at oracle scale. An odd partition count + tiny split/advisory
     // sizes maximize boundary diversity; reuse off forces every
     // exchange to stand alone.
-    val adverse = sys.env.get("SPARK_GRAFT_ADVERSE").contains("1")
-    if (adverse) {
-      builder
-        .config("spark.sql.exchange.reuse", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-        .config("spark.sql.shuffle.partitions", "7")
-        .config("spark.sql.files.maxPartitionBytes", "1m")
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64k")
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b")
-    }
-    val spark = builder.getOrCreate()
+    val adverse =
+      if (!sys.env.get("SPARK_GRAFT_ADVERSE").contains("1")) Nil
+      else Seq(
+        "spark.sql.exchange.reuse" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.shuffle.partitions" -> "7",
+        "spark.sql.files.maxPartitionBytes" -> "1m",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64k",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1b")
+    val spark = Session.local(Session.envCpus, adverse: _*)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Auto-geometry guard: q23/q91/q298 derive sign-LSH planes from the
-    // embeddings count (targetBucket 125 / 32); their DuckDB oracles pin
-    // 4 hyperplanes. Any verify tier whose derived geometry is not 4
-    // would silently hash-mismatch (advisor r08) — fail fast with the
-    // cause instead.
-    val autoGeomQueries = Set("q23_embedding_neardup_lsh", "q91_knn_join",
-      "q298_hubness")
+    // fail fast, with the cause, on a tier whose derived sign-LSH
+    // geometry would silently hash-mismatch the pinned oracles
+    val autoGeomQueries = graft.queries.SimilarityQueries.autoGeomQueries
     if (only.forall(f => autoGeomQueries.exists(f.contains))) {
       val n = spark.read.parquet(s"$sfDir/embeddings.parquet").count()
       for (tb <- Seq(32L, 125L)) {

@@ -139,9 +139,12 @@ private[graft] object Caches {
     * extra actions instead of a separate scan-or-join job per round
     * (r15: connectedComponents paid one join+isEmpty action per
     * iteration on top of the two checkpoints). Lifecycle and
-    * PlanAudit capture are [[small]]'s. */
+    * PlanAudit capture are [[small]]'s. A row whose `pred` is null
+    * counts as false. `df` must not already have a `__graft_flag`
+    * column: it would be overwritten and then dropped. */
   def smallCountedTrue(df: DataFrame, pred: org.apache.spark.sql.Column)
       : (DataFrame, Long) = {
+    requireFree(df, "__graft_flag")
     val withFlag = df.withColumn("__graft_flag", pred)
     if (capturing) synchronized {
       val p = withFlag.queryExecution.executedPlan
@@ -174,9 +177,11 @@ private[graft] object Caches {
     * aggregation job per round on top of the round's checkpoint.
     * Nulls in `h` are skipped, matching bit_xor's null-ignoring
     * semantics (an all-null/empty frame signs as (n, 0), exactly what
-    * the old `sig()` returned after its null guard). */
+    * the old `sig()` returned after its null guard). `df` must not
+    * already have a `__graft_h` column. */
   def smallCountedXor(df: DataFrame, h: org.apache.spark.sql.Column)
       : (DataFrame, Long, Long) = {
+    requireFree(df, "__graft_h")
     val withH = df.withColumn("__graft_h", h)
     if (capturing) synchronized {
       val p = withH.queryExecution.executedPlan
@@ -203,6 +208,10 @@ private[graft] object Caches {
     (cp.drop("__graft_h"), parts.map(_._1).sum,
       parts.map(_._2).foldLeft(0L)(_ ^ _))
   }
+
+  private def requireFree(df: DataFrame, name: String): Unit =
+    require(!df.columns.exists(_.equalsIgnoreCase(name)),
+      s"input already has a column named $name")
 
   /** Eagerly materialize a CORPUS-SCALE iteration frame (prefix-
     * doubling round tables, GD feature streams — one row per token

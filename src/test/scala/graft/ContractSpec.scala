@@ -1,20 +1,21 @@
 package graft
 
-/** Driver-contract invariants: every query is oracle-gated and every
-  * oracle has a query — a typo in either map would silently downgrade a
-  * row to the weaker rows-only check (or orphan an oracle). */
+import graft.queries.QueryDef
+
+/** Driver-contract invariants over the query registry: one name per
+  * query and number, and plan shapes that scale. */
 class ContractSpec extends SparkSpec {
 
-  test("queries and oracleSql cover exactly the same names") {
-    val q = SparkEntry.queries.keySet
-    val o = SparkEntry.oracleSql.keySet
-    assert((q -- o) === Set.empty[String], "queries without an oracle")
-    assert((o -- q) === Set.empty[String], "oracles without a query")
+  test("the registry rejects a query name defined twice") {
+    val q = QueryDef("q01_a", (s, _) => s.range(1).toDF(), "SELECT 0 AS id")
+    val e = intercept[IllegalArgumentException](
+      QueryDef.registry(Seq(q), Seq(q.copy(oracle = "SELECT 1 AS id"))))
+    assert(e.getMessage.contains("q01_a"))
   }
 
   test("query names follow the qNN_ prefix convention and are unique " +
     "per number") {
-    val names = SparkEntry.queries.keySet.toSeq
+    val names = SparkEntry.registry.map(_.name)
     assert(names.forall(_.matches("q\\d{2,3}_[a-z0-9_]+")), names.sorted)
     val nums = names.map(_.takeWhile(_ != '_'))
     assert(nums.distinct.size === nums.size, "duplicate query numbers")

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorExpressions
-import graft.ops.{DedupOps, Similarity, TextAnalysis}
+import graft.ops.{Caches, DedupOps, Similarity, TextAnalysis}
 
 /** Training-data operator behavior: vector math correctness, dedup-family
   * invariants, text-analysis determinism. */
@@ -774,5 +774,19 @@ class OpsSpec extends SparkSpec {
     assert(top(3L) === "the") // only term, score 0, still ranked
     assert(got.groupBy("doc_id").count()
       .filter(col("count") > 2).count() === 0)
+  }
+
+  test("smallCountedTrue/Xor: a caller column with the reserved name is " +
+    "rejected, not overwritten; a null predicate counts as false") {
+    val df = Seq[(Long, java.lang.Boolean)]((1L, true), (2L, null),
+      (3L, false)).toDF("id", "p")
+    val (out, n) = Caches.smallCountedTrue(df, col("p"))
+    assert(n === 1L)
+    assert(out.columns.toSeq === Seq("id", "p"))
+    val clash = df.withColumn("__graft_flag", lit(true))
+    intercept[IllegalArgumentException](Caches.smallCountedTrue(clash,
+      col("p")))
+    intercept[IllegalArgumentException](Caches.smallCountedXor(
+      df.withColumn("__GRAFT_H", lit(7L)), col("id")))
   }
 }

@@ -170,12 +170,21 @@ for c in 32 8; do
   rm -f "/tmp/gate_scaling_c${c}.json"
   SPARK_GRAFT_SF_DIR=$SF1_DIR SPARK_GRAFT_CPUS=$c SPARK_GRAFT_QUERIES=$REPS \
     SPARK_GRAFT_BENCH_OUT="/tmp/gate_scaling_c${c}.json" \
-    sbt -batch "runMain graft.Bench" >/dev/null 2>&1
+    sbt -batch "runMain graft.Bench" >/dev/null 2>&1 \
+    || { echo "FAIL: Bench at ${c} cores exited nonzero"; exit 1; }
 done
-python3 - "$ROUND" <<'EOF' || { echo "FAIL: scaling spot-check"; exit 1; }
+python3 - "$ROUND" "$REPS" <<'EOF' || { echo "FAIL: scaling spot-check"; exit 1; }
 import json, sys
 c32 = json.load(open("/tmp/gate_scaling_c32.json"))["queries"]
 c8  = json.load(open("/tmp/gate_scaling_c8.json"))["queries"]
+# a failed query times as -1.0; a missing or non-positive timing would
+# otherwise crash the ratio below instead of failing with its name
+bad_t = [f"{q} at {c} cores: {t.get(q, 'missing')}"
+         for q in sys.argv[2].split(",")
+         for c, t in (("32", c32), ("8", c8)) if t.get(q, 0) <= 0]
+if bad_t:
+    print("FAIL: no positive timing for " + "; ".join(bad_t))
+    sys.exit(1)
 out = {q: {"sec_32c": c32[q], "sec_8c": c8[q],
            "ratio_8c_over_32c": round(c8[q] / c32[q], 3)} for q in c32}
 json.dump(out, open(f"SCALING_{sys.argv[1]}.json", "w"), indent=1)
