@@ -3,14 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.engine.{Documents, Patients, Watcher}
+import graft.engine.{Documents, Merge, Patients, TxLog, Watcher}
 import graft.sources.{DocxExtract, PdfExtract, XlsxSource}
 
 /** End-to-end demonstration of the full hospital-warehouse ETL against
   * the REAL reference corpus (read-only at /root/reference): Excel
   * patient ingest → dedup/number/project → warehouse; then the
   * incremental document watcher with native DOCX extraction → metadata →
-  * resolution → DWH_DOCUMENT. Usage: sbt "runMain graft.DemoEtl [outDir]"
+  * resolution → DWH_DOCUMENT. Every warehouse table is a [[TxLog]]
+  * table. Usage: sbt "runMain graft.DemoEtl [outDir]"
   */
 object DemoEtl {
   def main(args: Array[String]): Unit = {
@@ -44,10 +45,12 @@ object DemoEtl {
     // is monotone across parallelize partitions, which preserve row order)
     val staged = excel.withColumn("__src_order", monotonically_increasing_id())
     val deduped = Patients.dedupAndNumber(staged)
-    val patients = Patients.toDwhPatient(deduped, uploadId = 1L)
-    val ipphist = Patients.toDwhIpphist(deduped, uploadId = 1L)
-    patients.write.mode("overwrite").parquet(s"$out/DWH_PATIENT")
-    ipphist.write.mode("overwrite").parquet(s"$out/DWH_PATIENT_IPPHIST")
+    // both patient tables are TxLog tables keyed on PATIENT_NUM, merged
+    // under epoch 1 — the same commit protocol as DWH_DOCUMENT below
+    val patients = Merge.upsertTransactional(spark, s"$out/DWH_PATIENT",
+      Patients.toDwhPatient(deduped, uploadId = 1L), "PATIENT_NUM", Some(1L))
+    Merge.upsertTransactional(spark, s"$out/DWH_PATIENT_IPPHIST",
+      Patients.toDwhIpphist(deduped, uploadId = 1L), "PATIENT_NUM", Some(1L))
     println(s"[demo] DWH_PATIENT rows=${patients.count()} " +
       s"(dedup dropped ${excel.count() - patients.count()}) " +
       s"maxPatientNum=${patients.agg(max("PATIENT_NUM")).head().getLong(0)}")
@@ -68,7 +71,7 @@ object DemoEtl {
       if (path.endsWith(".docx")) DocxExtract.extractText(bytes)
       else if (path.endsWith(".pdf")) PdfExtract.extractText(bytes)
       else "")
-    val ipp = spark.read.parquet(s"$out/DWH_PATIENT_IPPHIST")
+    val ipp = TxLog.read(spark, s"$out/DWH_PATIENT_IPPHIST")
     val loader = new Watcher.IncrementalLoader(
       spark,
       sourceDir = "/root/reference/fichiers source",

@@ -12,10 +12,10 @@ import org.apache.spark.sql.functions._
   * key plus a union — Catalyst plans a hash-partitioned anti join, and AQE
   * converts it to a broadcast anti join automatically whenever the incoming
   * batch's key set is small (the common incremental case: a micro-batch of
-  * thousands of keys against a warehouse of billions). With a transactional
-  * table format (Delta/Iceberg) the same call site would emit `MERGE INTO`;
-  * the plain-Parquet rewrite is kept behind this interface so that can slot
-  * in without touching callers (SURVEY.md §7.4).
+  * thousands of keys against a warehouse of billions). Warehouse tables
+  * take the transactional form, [[upsertTransactional]] over a [[TxLog]]
+  * table — the `MERGE INTO` a Delta/Iceberg user would write
+  * (SURVEY.md §7.4).
   */
 object Merge {
 
@@ -43,9 +43,7 @@ object Merge {
     *     micro-batch of thousands of keys against a warehouse of
     *     billions rewrites a handful of files, not the table;
     *   - visibility is an atomic manifest CAS — readers see the old
-    *     version or the new one, never a half-written directory (the
-    *     plain-parquet [[upsert]] + overwrite has a destroy-then-rebuild
-    *     window);
+    *     version or the new one, never a half-written directory;
     *   - concurrent writers retry on commit conflict, and a replayed
     *     `epoch` (streaming batchId / watcher uploadId) is skipped for
     *     exactly-once delivery.
@@ -148,110 +146,5 @@ object Merge {
       .select((keys ++ tracked).map(col) ++
         Seq(col("effective_from"), col("effective_to"),
           col("is_current")): _*)
-  }
-
-  /** Partition-scoped MERGE into a parquet table partitioned by
-    * `partCol` — the plain-parquet analogue of a transactional
-    * `MERGE`/`replaceWhere`: only the partitions PRESENT IN THE BATCH
-    * are read (partition-pruned scan), merged, and rewritten (dynamic
-    * partition overwrite); every other partition's files are untouched.
-    * At warehouse scale this turns the sink from O(table) per batch
-    * into O(affected partitions) — a 100 TB table absorbing a
-    * single-partition micro-batch rewrites one partition, not 100 TB.
-    *
-    * The affected-partition list is collected driver-side: partition
-    * VALUES only (metadata-sized, like a catalog listing), never data.
-    *
-    * Commit protocol: the merged partitions are first written to a
-    * STAGE directory (which also materializes the merge before any live
-    * file is touched — the write never overwrites files it is still
-    * reading), then each affected partition directory is swapped into
-    * the live table with two renames (live → aside, stage → live). All
-    * paths are resolved through Hadoop `FileSystem`, so the same code
-    * runs on local fs and HDFS, where a rename is an atomic metadata
-    * op; the crash window per partition is those two metadata ops — the
-    * same contract as the whole-table swap in `Watcher.overwriteTable`,
-    * scoped to one partition. (On object stores, rename degrades to
-    * copy; there a transactional format — Delta/Iceberg MERGE — is the
-    * right sink, behind this same interface.) The aside directory lives
-    * OUTSIDE the table root so a crashed swap never leaves a bogus
-    * `part=X.old` directory for partition discovery to misread, and the
-    * next run RECOVERS it: an aside partition missing from the live
-    * table is renamed back before anything is read (crash between the
-    * two renames), one also present live is discarded (crash after the
-    * second rename — the new version already won). Either way no
-    * committed row is ever lost to a mid-swap crash (spec-simulated in
-    * DedupMergeSpec).
-    *
-    * CONTRACT: the partition value must be a pure function of the merge
-    * key (a row never moves partitions between batches) — the same
-    * stability requirement a `replaceWhere` upsert carries. If a key
-    * re-arrived under a different partition value, its old row would
-    * not be in the pruned scan and would survive as a stale duplicate;
-    * moving keys need the full-table [[upsert]]. */
-  def upsertPartitioned(tablePath: String, incoming: DataFrame,
-                        keys: Seq[String], partCol: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val spark = incoming.sparkSession
-    val table = new Path(tablePath)
-    val fs = table.getFileSystem(spark.sessionState.newHadoopConf())
-    val stage = new Path(tablePath + ".stage")
-    val asideDir = new Path(tablePath + ".aside")
-    // CRASH RECOVERY from a run that died between its two renames: an
-    // aside entry whose live partition is MISSING holds the only copy of
-    // that partition's previous rows — restore it BEFORE the pruned read
-    // below, or the merge would read nothing there and the batch would
-    // silently drop every pre-existing row of that partition. An aside
-    // entry whose live partition EXISTS is a leftover from a crash after
-    // the second rename (the new version already won): drop it.
-    if (fs.exists(asideDir)) {
-      fs.listStatus(asideDir).filter(_.isDirectory).foreach { st =>
-        val live = new Path(table, st.getPath.getName)
-        if (!fs.exists(live)) fs.rename(st.getPath, live)
-      }
-      fs.delete(asideDir, true)
-    }
-    if (!fs.exists(table)) {
-      incoming.write.partitionBy(partCol).mode("overwrite").parquet(tablePath)
-    } else {
-      val parts = incoming.select(col(partCol)).distinct()
-        .collect().map(_.get(0)).toSeq
-      // null-safe membership: isin(null) is NULL (never true), yet the
-      // rewrite must still cover the null partition — without the
-      // explicit isNull arm, existing null-partition rows would be
-      // silently dropped by a batch containing a null partition value.
-      // Empty string belongs to the same bucket: Spark writes both null
-      // and "" to __HIVE_DEFAULT_PARTITION__ and reads them back as null
-      val (nullPart, defined) =
-        parts.partition(p => p == null || p == "")
-      val prune0 =
-        if (defined.nonEmpty) col(partCol).isin(defined: _*) else lit(false)
-      val prune =
-        if (nullPart.nonEmpty) prune0 || col(partCol).isNull else prune0
-      val existing = spark.read.parquet(tablePath)
-        .filter(prune) // pruned to affected partitions
-      val merged = upsert(existing, incoming, keys)
-      if (fs.exists(stage)) fs.delete(stage, true)
-      merged.write.mode("overwrite").partitionBy(partCol)
-        .parquet(stage.toString)
-      // swap each staged partition dir into the live table; directory
-      // NAMES come from the filesystem listing, so Hive partition-value
-      // escaping (%-encoding, __HIVE_DEFAULT_PARTITION__) never needs
-      // to be reimplemented here
-      val staged = fs.listStatus(stage).filter(st =>
-        st.isDirectory && st.getPath.getName.startsWith(partCol + "="))
-      if (staged.nonEmpty) fs.mkdirs(asideDir)
-      staged.foreach { st =>
-        val name = st.getPath.getName
-        val live = new Path(table, name)
-        val aside = new Path(asideDir, name)
-        val had = fs.exists(live)
-        if (had) fs.rename(live, aside)
-        fs.rename(st.getPath, live)
-        if (had) fs.delete(aside, true)
-      }
-      fs.delete(stage, true)
-      fs.delete(asideDir, true)
-    }
   }
 }

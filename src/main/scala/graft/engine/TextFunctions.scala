@@ -42,13 +42,6 @@ object TextFunctions {
     parseFrDate(get(kept, lit(0)))
   }
 
-  /** Same rule but returning the raw `dd/MM/yyyy` string (sink-boundary
-    * form — the reference stores dates as text, SURVEY.md §1.2). */
-  def extractDocumentDateRaw(text: Column, minYear: Int = 2001): Column = {
-    val all = regexp_extract_all(normalizeText(text), lit(DatePattern), lit(0))
-    get(filter(all, d => year(parseFrDate(d)) >= minYear), lit(0))
-  }
-
   /** Author pattern: `dr` + one or two lowercase-ASCII words, applied to
     * normalized text (`exo_2.py:171`). ASCII-only on purpose — accented
     * names are invisible to the reference and the faithful mode pins that. */
@@ -88,10 +81,6 @@ object TextFunctions {
     when(last.isNotNull && length(last) > 0,
       concat(lit("Dr "), initcap(last))).otherwise(lit(null))
   }
-
-  /** F5 — load-date stamp, `dd/MM/yyyy` at the sink boundary
-    * (`exo_1.py:75`); internal representation stays DateType. */
-  def updateDateStamp(): Column = date_format(current_date(), "dd/MM/yyyy")
 
   /** F7 — provenance zero-pad: Oracle `decode(length(id*5124), ...)`
     * zero-pad of `id*5124` to width 8 (export_patient.xlsx sheet "SQL"). */

@@ -1,6 +1,6 @@
 package graft.engine
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -23,12 +23,19 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    ALL current files, faithful to `update_document_data`; the merge
   *    makes it idempotent by key.
   *  - T5 lineage → `uploadId` counter starts at 1, +1 per processed batch,
-  *    stamped on every row; recovered from the warehouse on restart.
-  *  - T6 deletions → rows are never deleted (reference behavior); pass
-  *    `deleteMissing=true` for the sane MERGE-with-delete mode
-  *    (SURVEY.md §7.4).
+  *    stamped on every row; recovered on restart from the epoch tags of
+  *    the table's transaction log.
+  *  - T6 deletions → rows are never deleted (reference behavior); a
+  *    caller that wants them gone issues [[TxLog.delete]].
+  *
+  * Every batch becomes visible through ONE commit protocol: the atomic
+  * manifest commit of a [[TxLog]] table.
   */
 object Watcher {
+
+  /** Consecutive failed polls after which [[IncrementalLoader.start]]
+    * gives up and terminates its heartbeat query with the last error. */
+  val MaxFailedPolls = 5
 
   case class Changes(added: Seq[String], deleted: Seq[String],
                      modified: Seq[String]) {
@@ -101,30 +108,27 @@ object Watcher {
 
   /** One incremental warehouse table maintained by polling a source
     * directory. `process(files, uploadId)` turns the CURRENT full file
-    * set into warehouse rows; the watcher merges them by `keys` into the
-    * parquet table at `tablePath`. */
-  /** @param partitionCol when set, the warehouse table is stored
-    *   partitioned by this (process-emitted) column and batches are
-    *   merged via [[Merge.upsertPartitioned]] — only batch-affected
-    *   partitions are read and rewritten, the warehouse-scale sink.
+    * set into warehouse rows; the watcher merges them by key into the
+    * [[TxLog]] table at `tablePath`. Each poll's batch lands via
+    * [[TxLog.mergeEpoch]] with the uploadId as the epoch — EXACTLY ONCE:
+    * the epoch is stamped into the manifest at the atomic commit point,
+    * so a crash anywhere leaves either no trace of the batch (the
+    * retrying heartbeat re-runs the same diff) or the full committed
+    * batch (a replay of the same uploadId is detected from the log and
+    * skipped). Upload-id recovery reads the LOG, not the rows, so it
+    * survives batches whose rows were later overwritten.
+    *
+    * @param keys the merge key: one numeric column (the TxLog contract).
+    * @param partitionCol when set, the merge prunes files by (partition,
+    *   key-range) via [[TxLog.mergeEpochPartitioned]] and all touched
+    *   partitions commit in the same atomic manifest.
     * @param incremental when true, only CHANGED files (added/modified;
     *   all files on the first poll) are processed per batch instead of
     *   the reference's reprocess-all T3 semantics — the natural partner
-    *   of the partitioned sink: a one-file change touches one file's
-    *   partition.
-    * @param useTxLog when true, the warehouse table is a [[TxLog]]
-    *   transactional table and each poll's batch lands via
-    *   [[TxLog.mergeEpoch]] with the uploadId as the epoch — EXACTLY
-    *   ONCE: the epoch is stamped into the manifest at the atomic
-    *   commit point, so a crash anywhere leaves either no trace of the
-    *   batch (the retrying heartbeat re-runs the same diff) or the
-    *   full committed batch (a replay of the same uploadId is detected
-    *   from the log and skipped). Upload-id recovery reads the LOG,
-    *   not the rows, so it survives batches whose rows were later
-    *   overwritten. Single numeric key (the TxLog contract). Combines
-    *   with `partitionCol`: the merge then prunes files by (partition,
-    *   key-range) via [[TxLog.mergeEpochPartitioned]] and all touched
-    *   partitions commit in the same atomic manifest.
+    *   of `partitionCol`: a one-file change touches one file's partition.
+    * @param useTxLog must be true: TxLog is the only sink. The parameter
+    *   remains because the benchmark harness (`perfbench`) passes it by
+    *   name, and goes away the next time that harness changes.
     */
   final class IncrementalLoader(
       spark: SparkSession,
@@ -132,17 +136,14 @@ object Watcher {
       tablePath: String,
       keys: Seq[String],
       process: (DataFrame, Long) => DataFrame,
-      deleteMissing: Boolean = false,
       partitionCol: Option[String] = None,
       incremental: Boolean = false,
-      useTxLog: Boolean = false,
+      useTxLog: Boolean = true,
       tableListing: Boolean = false,
       listingCutover: Long = 0L) {
 
-    // deleteMissing compares the warehouse against the FULL current file
-    // set, which both narrowed-batch modes no longer carry
-    require(!(deleteMissing && (incremental || partitionCol.nonEmpty)),
-      "deleteMissing requires reprocess-all semantics over the whole table")
+    require(useTxLog, "TxLog is the only sink: useTxLog must be true")
+    require(keys.size == 1, "TxLog tables key on one numeric column")
     // the table-backed listing keeps the reference's reprocess-all T3
     // semantics: the fire decision needs ONE count off the diff join,
     // never a driver-side touched-path set
@@ -161,34 +162,19 @@ object Watcher {
       * cross it again, and flapping between modes would re-persist the
       * listing every poll. */
     private var switchedToTable = false
-    require(!(useTxLog && deleteMissing),
-      "the TxLog sink is its own transactional MERGE: no deleteMissing")
-    require(!useTxLog || keys.size == 1,
-      "TxLog tables key on one numeric column")
 
     private var snap: Map[String, Long] = Map.empty
     private var firstPoll = true
-    /** T5: recovered on restart — from the transaction log's epoch tags
-      * (authoritative: committed atomically with the data) in TxLog
-      * mode, else from the table's max UPLOAD_ID. */
+    /** T5: recovered on restart from the transaction log's epoch tags
+      * (authoritative: committed atomically with the data). */
     private var uploadId: Long =
-      if (useTxLog) TxLog.lastEpoch(spark, tablePath).getOrElse(0L)
-      else currentTable() match {
-        case Some(t) if t.columns.contains("UPLOAD_ID") =>
-          val m = t.agg(max(col("UPLOAD_ID"))).head()
-          if (m.isNullAt(0)) 0L else m.getLong(0)
-        case _ => 0L
-      }
+      TxLog.lastEpoch(spark, tablePath).getOrElse(0L)
 
     def lastUploadId: Long = uploadId
 
     def currentTable(): Option[DataFrame] =
-      if (useTxLog) {
-        if (TxLog.currentVersion(spark, tablePath) == 0L) None
-        else Some(TxLog.read(spark, tablePath))
-      } else if (Files.isDirectory(Paths.get(tablePath)))
-        Some(spark.read.parquet(tablePath))
-      else None
+      if (TxLog.currentVersion(spark, tablePath) == 0L) None
+      else Some(TxLog.read(spark, tablePath))
 
     /** T1/T3 — one poll: diff the snapshot; on the first poll or any
       * change, reprocess ALL files and merge. Returns the upload id of
@@ -268,35 +254,16 @@ object Watcher {
     }
 
     /** The shared sink tail of a fired poll: merge `incoming` into the
-      * warehouse under the configured mode (TxLog exactly-once /
-      * partition-pruned / plain upsert). */
+      * warehouse, exactly once — the epoch (= uploadId) rides in the
+      * manifest commit; with a partition column the merge prunes by
+      * (partition, key-range) and all touched partitions commit
+      * atomically. */
     private def commitBatch(incoming: DataFrame, nextId: Long): Unit =
-      if (useTxLog) {
-        // exactly-once: epoch (=uploadId) rides in the manifest commit;
-        // with a partition column the merge prunes by (partition,
-        // key-range) and all touched partitions commit atomically
-        partitionCol match {
-          case Some(pc) => TxLog.mergeEpochPartitioned(
-            spark, tablePath, incoming, keys.head, pc, nextId)
-          case None =>
-            TxLog.mergeEpoch(spark, tablePath, incoming, keys.head, nextId)
-        }
-      } else partitionCol match {
-        case Some(pc) =>
-          // partition-scoped sink: only batch-affected partitions are
-          // read, merged and rewritten
-          Merge.upsertPartitioned(tablePath, incoming, keys, pc)
+      partitionCol match {
+        case Some(pc) => TxLog.mergeEpochPartitioned(
+          spark, tablePath, incoming, keys.head, pc, nextId)
         case None =>
-          val merged = currentTable() match {
-            case None => incoming
-            case Some(existing) =>
-              val base = Merge.upsert(existing, incoming, keys)
-              if (deleteMissing)
-                base.join(incoming.select(keys.map(col): _*).distinct(),
-                  keys, "left_semi")
-              else base
-          }
-          overwriteTable(merged)
+          TxLog.mergeEpoch(spark, tablePath, incoming, keys.head, nextId)
       }
 
     /** The previous poll's listing, persisted NEXT TO the warehouse —
@@ -336,52 +303,31 @@ object Watcher {
       }
     }
 
-    /** Replace the parquet table with two renames: write to a temp dir,
-      * rename the live directory ASIDE, rename the new one into place,
-      * then delete the old copy. The no-table window is two metadata
-      * ops (vs the whole recursive delete if we deleted first) — the
-      * closest a plain directory gets to a transactional commit;
-      * Delta/Iceberg would make this a real MERGE txn, and the
-      * partitioned sink ([[Merge.upsertPartitioned]]) avoids the full
-      * rewrite entirely. */
-    private def overwriteTable(df: DataFrame): Unit = {
-      val tmp = tablePath + ".tmp"
-      df.write.mode("overwrite").parquet(tmp)
-      val target = Paths.get(tablePath)
-      val old = Paths.get(tablePath + ".old")
-      if (Files.exists(old)) deleteRecursively(old)
-      val hadOld = Files.exists(target)
-      if (hadOld) Files.move(target, old, StandardCopyOption.ATOMIC_MOVE)
-      Files.move(Paths.get(tmp), target, StandardCopyOption.ATOMIC_MOVE)
-      if (hadOld) deleteRecursively(old)
-    }
-
-    private def deleteRecursively(p: Path): Unit = {
-      val s = Files.walk(p)
-      try s.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
-      finally s.close()
-    }
-
     /** T1 — continuous mode: a rate-source heartbeat stream whose only
       * job is to run `pollOnce` every `intervalSeconds` (the reference's
       * `time.sleep(30)` loop, `script.py:117`). With `checkpointDir` the
       * heartbeat query is checkpointed and restartable: a new process
-      * builds a fresh loader (upload-id recovered from the warehouse,
-      * T5) and resumes the same query from the checkpoint. */
+      * builds a fresh loader (upload-id recovered from the log, T5) and
+      * resumes the same query from the checkpoint. */
     def start(intervalSeconds: Int = 30,
               checkpointDir: Option[String] = None): StreamingQuery = {
+      var failedPolls = 0
       val w = spark.readStream.format("rate").option("rowsPerSecond", 1).load()
         .writeStream
         .trigger(Trigger.ProcessingTime(s"$intervalSeconds seconds"))
         .foreachBatch { (_: DataFrame, _: Long) =>
-          // T8 containment: a throw inside foreachBatch terminates the
-          // whole streaming query — one failed poll (transient fs race,
-          // unreadable file) must not stop the watcher; the next tick
-          // retries from a fresh snapshot. pollOnce still throws for
-          // direct callers (tests assert on real errors).
-          try { pollOnce(); () }
+          // T8 containment: one failed poll (transient fs race,
+          // unreadable file) must not stop the watcher — the next tick
+          // retries from a fresh snapshot. An error that persists for
+          // MaxFailedPolls consecutive ticks is rethrown, which
+          // terminates the heartbeat query with the error in
+          // StreamingQuery.exception instead of retrying forever.
+          try { pollOnce(); failedPolls = 0 }
           catch { case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[watcher] poll failed, will retry: $e")
+            failedPolls += 1
+            if (failedPolls >= MaxFailedPolls) throw e
+            System.err.println(s"[watcher] poll failed " +
+              s"($failedPolls of $MaxFailedPolls), will retry: $e")
           }
         }
       checkpointDir.fold(w)(d => w.option("checkpointLocation", d)).start()

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native Catalyst expression for the vector hot path: a sequential
@@ -79,7 +78,4 @@ object VectorExpressions {
     GraftSqlBridge.column(DotProductD(
       GraftSqlBridge.expression(a.cast("array<double>")),
       GraftSqlBridge.expression(b.cast("array<double>"))))
-
-  /** L2 norm via the same codegen'd loop. */
-  def norml2(a: Column): Column = sqrt(dotd(a, a))
 }

@@ -48,12 +48,6 @@ object Multimodal {
   /** Typed record entering the decode stage. */
   case class MediaRow(media_id: Long, payload: Array[Byte])
 
-  /** Wrap a text column as an opaque binary payload (stand-in for real
-    * media bytes from `spark.read.format("binaryFile")`). */
-  def asBinary(df: DataFrame, id: String, payloadCol: String): DataFrame =
-    df.select(col(id).as("media_id").cast("long"),
-      col(payloadCol).cast("binary").as("payload"))
-
   // ---- real image path (javax.imageio) --------------------------------
 
   /** Decoded-image record: genuine dimensions + a 4-dim feature

@@ -825,7 +825,8 @@ object SketchQueries {
       val est = skA.join(skB, Seq("d", "bucket"))
         .groupBy("d").agg(sum(col("cnt") * col("cntb")).as("ip"))
         .agg(min(col("ip")).as("est_pairs"))
-      val exact = kc.filter(col("cb") > 0)
+      // a null key joins nothing: the oracle's JOIN USING (k) drops it
+      val exact = kc.filter(col("cb") > 0 && col("k").isNotNull)
         .agg(sum(col("ca") * col("cb")).as("exact_pairs"))
       // broadcast hint is load-bearing: both sides are one-row aggs,
       // but without it the planner may pick a shuffled CartesianProduct

@@ -56,13 +56,6 @@ object EventStreams {
       .select(col("window.start").as("window_start"), col("n"), col("kl"))
   }
 
-  /** JSON property extraction + per-user sessionized counts (batch or
-    * stream; stream mode uses the same watermark contract). */
-  def enriched(events: DataFrame): DataFrame =
-    events
-      .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
-      .withColumn("hour", date_trunc("hour", col("ts")))
-
   /** Streaming exact dedup on a key subset with BOUNDED state:
     * `dropDuplicatesWithinWatermark` keeps a key's fingerprint only
     * until the watermark passes it, so state is ∝ keys-per-watermark-

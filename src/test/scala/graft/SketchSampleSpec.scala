@@ -186,6 +186,21 @@ class SketchSampleSpec extends SparkSpec {
     assert(rawSub.except(wSub).isEmpty && wSub.except(rawSub).isEmpty)
   }
 
+  test("q311 exact join size skips null keys, as the oracle's " +
+    "JOIN USING (k) does") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_q311").toString
+    def ts(d: String) = java.sql.Timestamp.valueOf(s"$d 00:00:00")
+    // key 1: 3 rows, 2 after 2000 -> 3 * 2 pairs; key 2: none after
+    // 2000 -> no pairs; null key: 2 rows after 2000 -> must add nothing
+    Seq((Some(1L), ts("2001-01-01")), (Some(1L), ts("2002-01-01")),
+      (Some(1L), ts("1999-01-01")), (Some(2L), ts("1998-01-01")),
+      (None, ts("2003-01-01")), (None, ts("2004-01-01")))
+      .toDF("l_partkey", "l_shipdate")
+      .write.parquet(s"$dir/lineitem.parquet")
+    val r = SparkEntry.queries("q311_join_size_cm")(spark, dir).head()
+    assert(r.getAs[Long]("exact_pairs") === 6L)
+  }
+
   test("countMin: sketches MERGE by cell-wise addition (sketch of " +
     "union == summed sketches)") {
     val a = Seq.fill(50)("x").toDF("w")

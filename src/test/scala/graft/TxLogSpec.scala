@@ -397,6 +397,22 @@ class TxLogSpec extends SparkSpec {
     assert(pb.select("pc").distinct().as[String].collect().toSeq === Seq("b"))
   }
 
+  test("partitioned merge rejects a batch with a null partition value " +
+    "and leaves the table version unchanged") {
+    val root = freshRoot()
+    val base = Seq((1L, "a", "t0"), (2L, "b", "t0")).toDF("id", "pc", "v")
+    assert(TxLog.mergePartitioned(spark, root, base, "id", "pc") === 1L)
+    val batch = Seq((3L, None: Option[String], "t1"), (4L, Some("a"), "t1"))
+      .toDF("id", "pc", "v")
+    val e = intercept[IllegalArgumentException](
+      TxLog.mergePartitioned(spark, root, batch, "id", "pc"))
+    assert(e.getMessage.contains("null pc"))
+    assert(TxLog.currentVersion(spark, root) === 1L)
+    assert(TxLog.read(spark, root).select("id", "pc", "v")
+      .as[(Long, String, String)].collect()
+      .toSet === Set((1L, "a", "t0"), (2L, "b", "t0")))
+  }
+
   test("LogStore seam: the DML cycle runs identically under LocalLink " +
     "and AtomicRename, the provider is pluggable, and LocalLink's CAS " +
     "refuses an existing destination") {

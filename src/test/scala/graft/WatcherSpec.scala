@@ -14,13 +14,24 @@ class WatcherSpec extends SparkSpec {
   private def writeDoc(dir: String, name: String, content: String): Unit =
     Files.write(Paths.get(dir, name), content.getBytes("UTF-8"))
 
-  private def mkLoader(src: String, wh: String) =
+  /** The numeric-key loader every case shares: `doc_id` is the `N` of
+    * `name_N.ext`; with a partition column, that column holds `ext`. */
+  private def mkLoader(src: String, wh: String,
+                       partitionCol: Option[String] = None,
+                       incremental: Boolean = false,
+                       tableListing: Boolean = false,
+                       listingCutover: Long = 0L) =
     new Watcher.IncrementalLoader(
-      spark, src, wh, keys = Seq("path"),
-      process = (files, uploadId) => files.select(
-        regexp_extract(col("path"), "([^/]+)$", 1).as("path"),
-        length(col("content")).as("n_bytes"),
-        lit(uploadId).as("UPLOAD_ID")))
+      spark, src, wh, keys = Seq("doc_id"),
+      process = (files, uploadId) => files.select(Seq(
+        regexp_extract(col("path"), "_(\\d+)\\.", 1).cast("long")
+          .as("doc_id"),
+        length(col("content")).cast("long").as("n_bytes"),
+        lit(uploadId).as("UPLOAD_ID")) ++
+        partitionCol.map(pc =>
+          regexp_extract(col("path"), "\\.(\\w+)$", 1).as(pc)): _*),
+      partitionCol = partitionCol, incremental = incremental,
+      tableListing = tableListing, listingCutover = listingCutover)
 
   test("T1/T3/T5: first poll fires with upload_id=1; unchanged poll is " +
     "a no-op; any change reprocesses ALL files under the next id") {
@@ -38,7 +49,7 @@ class WatcherSpec extends SparkSpec {
 
     writeDoc(src, "c_3.pdf", "gamma")      // new file
     assert(loader.pollOnce() === Some(2L))
-    val t2 = loader.currentTable().get.orderBy("path")
+    val t2 = loader.currentTable().get
     assert(t2.count() === 3)
     // T3: ALL rows re-stamped — full reprocess, not a per-file delta
     assert(t2.select("UPLOAD_ID").as[Long].collect().toSet === Set(2L))
@@ -56,34 +67,27 @@ class WatcherSpec extends SparkSpec {
     writeDoc(src, "a_1.pdf", "v2-longer")  // modified
     assert(loader.pollOnce() === Some(2L))
     assert(loader.currentTable().get
-      .filter(col("path") === "a_1.pdf")
-      .select("n_bytes").as[Int].head() === 9)
+      .filter(col("doc_id") === 1L)
+      .select("n_bytes").as[Long].head() === 9L)
 
     Files.delete(Paths.get(src, "a_1.pdf")) // deleted
     writeDoc(src, "b_2.pdf", "other")
     assert(loader.pollOnce() === Some(3L))
     val t = loader.currentTable().get
     // T6: stale row for the deleted file survives (reference behavior)
-    assert(t.filter(col("path") === "a_1.pdf").count() === 1)
-    assert(t.filter(col("path") === "b_2.pdf").count() === 1)
+    assert(t.filter(col("doc_id") === 1L).count() === 1)
+    assert(t.filter(col("doc_id") === 2L).count() === 1)
   }
 
-  test("T6 sane mode: deleteMissing=true drops rows for vanished files") {
-    val src = Files.createTempDirectory("graft_src3").toString
-    val wh = Files.createTempDirectory("graft_wh3").toString + "/docs"
-    writeDoc(src, "a_1.pdf", "v1")
-    writeDoc(src, "b_2.pdf", "v1")
-    val loader = new Watcher.IncrementalLoader(
-      spark, src, wh, keys = Seq("path"),
-      process = (files, uploadId) => files.select(
-        regexp_extract(col("path"), "([^/]+)$", 1).as("path"),
-        lit(uploadId).as("UPLOAD_ID")),
-      deleteMissing = true)
-    loader.pollOnce()
-    Files.delete(Paths.get(src, "b_2.pdf"))
-    loader.pollOnce()
-    assert(loader.currentTable().get.select("path").as[String]
-      .collect().toSeq === Seq("a_1.pdf"))
+  test("useTxLog = false is rejected at construction: TxLog is the " +
+    "only sink") {
+    val src = Files.createTempDirectory("graft_src_nt").toString
+    val wh = Files.createTempDirectory("graft_wh_nt").toString + "/docs"
+    val e = intercept[IllegalArgumentException](
+      new Watcher.IncrementalLoader(spark, src, wh, Seq("doc_id"),
+        (files, _) => files, useTxLog = false))
+    assert(e.getMessage.contains("only sink"))
+    assert(!Files.exists(Paths.get(wh)))
   }
 
   test("T5: upload id is recovered from the warehouse after restart") {
@@ -95,141 +99,6 @@ class WatcherSpec extends SparkSpec {
     assert(reborn.pollOnce() === Some(2L)) // continues, does not restart at 1
   }
 
-  private def partFiles(dir: String): Map[String, Long] = {
-    val s = java.nio.file.Files.walk(Paths.get(dir))
-    try {
-      import scala.jdk.CollectionConverters._
-      s.iterator().asScala
-        .filter(p => Files.isRegularFile(p) &&
-          !p.getFileName.toString.startsWith("_"))
-        .map(p => p.toString -> Files.getLastModifiedTime(p).toMillis)
-        .toMap
-    } finally s.close()
-  }
-
-  test("partition-pruned MERGE: a single-partition batch rewrites ONLY " +
-    "that partition's files; other partitions are byte-untouched") {
-    val wh = Files.createTempDirectory("graft_whp").toString + "/t"
-    val base = Seq(
-      (1L, "a", "p1"), (2L, "b", "p1"), (3L, "c", "p2"), (4L, "d", "p2")
-    ).toDF("id", "v", "shard")
-    graft.engine.Merge.upsertPartitioned(wh, base, Seq("id"), "shard")
-    val p2Before = partFiles(s"$wh/shard=p2")
-    assert(p2Before.nonEmpty)
-    Thread.sleep(1100) // make any rewrite visible in mtimes
-
-    // batch touching only p1: update id=1, insert id=9
-    val batch = Seq((1L, "a2", "p1"), (9L, "z", "p1")).toDF("id", "v", "shard")
-    graft.engine.Merge.upsertPartitioned(wh, batch, Seq("id"), "shard")
-
-    // p2 files: same names, same mtimes — never read-side rewritten
-    assert(partFiles(s"$wh/shard=p2") === p2Before)
-    // p1 merged correctly; p2 rows intact
-    val t = spark.read.parquet(wh)
-    assert(t.count() === 5)
-    assert(t.filter(col("id") === 1).select("v").as[String].head() === "a2")
-    assert(t.filter(col("shard") === "p2").count() === 2)
-  }
-
-  test("partition-pruned MERGE crash recovery: a run that died between " +
-    "its two renames (live partition moved aside, stage not yet in) " +
-    "loses no committed rows — the next batch restores and merges") {
-    val wh = Files.createTempDirectory("graft_whc").toString + "/t"
-    val base = Seq(
-      (1L, "a", "p1"), (2L, "b", "p1"), (3L, "c", "p2")
-    ).toDF("id", "v", "shard")
-    graft.engine.Merge.upsertPartitioned(wh, base, Seq("id"), "shard")
-
-    // simulate the mid-swap crash: p1 was renamed aside, the staged
-    // replacement never made it in — live table has NO p1 directory,
-    // the only copy of p1's committed rows sits in the aside dir
-    Files.createDirectories(Paths.get(s"$wh.aside"))
-    Files.move(Paths.get(s"$wh/shard=p1"), Paths.get(s"$wh.aside/shard=p1"))
-    assert(spark.read.parquet(wh).filter(col("shard") === "p1").count() === 0)
-
-    // next batch: recovery must restore p1 BEFORE the pruned read, so
-    // the merge sees ids 1 and 2 — id 1 updates, id 2 SURVIVES
-    val batch = Seq((1L, "a2", "p1")).toDF("id", "v", "shard")
-    graft.engine.Merge.upsertPartitioned(wh, batch, Seq("id"), "shard")
-    val t = spark.read.parquet(wh)
-    assert(t.count() === 3)
-    assert(t.filter(col("id") === 1).select("v").as[String].head() === "a2")
-    assert(t.filter(col("id") === 2).select("v").as[String].head() === "b")
-    assert(!Files.exists(Paths.get(s"$wh.aside")))
-
-    // crash AFTER the second rename (aside copy is stale, live is new):
-    // recovery must DISCARD the aside copy, not resurrect old rows
-    Files.createDirectories(Paths.get(s"$wh.aside/shard=p2"))
-    Files.copy(Paths.get(s"$wh/shard=p2").toFile.listFiles()
-      .filter(_.getName.endsWith(".parquet")).head.toPath,
-      Paths.get(s"$wh.aside/shard=p2/stale.parquet"))
-    val batch2 = Seq((4L, "d", "p2")).toDF("id", "v", "shard")
-    graft.engine.Merge.upsertPartitioned(wh, batch2, Seq("id"), "shard")
-    val t2 = spark.read.parquet(wh)
-    assert(t2.filter(col("shard") === "p2").count() === 2) // 3 and 4, no dupes
-    assert(!Files.exists(Paths.get(s"$wh.aside")))
-  }
-
-  test("partition-pruned MERGE: a batch with a NULL partition value " +
-    "merges into the null partition without dropping its existing rows") {
-    val wh = Files.createTempDirectory("graft_whn").toString + "/t"
-    val base = Seq(
-      (1L, "a", None: Option[String]), (2L, "b", Some("p1"))
-    ).toDF("id", "v", "shard")
-    graft.engine.Merge.upsertPartitioned(wh, base, Seq("id"), "shard")
-    val batch = Seq((3L, "c", None: Option[String]), (1L, "a2", None: Option[String]))
-      .toDF("id", "v", "shard")
-    graft.engine.Merge.upsertPartitioned(wh, batch, Seq("id"), "shard")
-    val t = spark.read.parquet(wh)
-    assert(t.count() === 3) // 1 updated in place, 2 untouched, 3 inserted
-    assert(t.filter(col("id") === 1).select("v").as[String].head() === "a2")
-    assert(t.filter(col("id") === 2).count() === 1)
-    assert(t.filter(col("id") === 3).count() === 1)
-
-    // empty string lands in the same __HIVE_DEFAULT_PARTITION__ bucket:
-    // a batch with "" must merge against the null-partition rows too
-    val batch2 = Seq((4L, "d", Some(""))).toDF("id", "v", "shard")
-    graft.engine.Merge.upsertPartitioned(wh, batch2, Seq("id"), "shard")
-    val t2 = spark.read.parquet(wh)
-    assert(t2.count() === 4) // ids 1 and 3 survive alongside the new 4
-    assert(t2.filter(col("id").isin(1L, 3L, 4L)).count() === 3)
-  }
-
-  test("incremental + partitioned loader: a one-file change processes " +
-    "one file and leaves other shards' files untouched") {
-    val src = Files.createTempDirectory("graft_src5").toString
-    val wh = Files.createTempDirectory("graft_wh5").toString + "/docs"
-    writeDoc(src, "a_1.pdf", "alpha")
-    writeDoc(src, "b_2.docx", "beta")
-    val loader = new Watcher.IncrementalLoader(
-      spark, src, wh, keys = Seq("path"),
-      process = (files, uploadId) => files.select(
-        regexp_extract(col("path"), "([^/]+)$", 1).as("path"),
-        length(col("content")).as("n_bytes"),
-        lit(uploadId).as("UPLOAD_ID"),
-        regexp_extract(col("path"), "\\.([a-z]+)$", 1).as("ext")),
-      partitionCol = Some("ext"),
-      incremental = true)
-
-    assert(loader.pollOnce() === Some(1L))
-    val docxBefore = partFiles(s"$wh/ext=docx")
-    assert(docxBefore.nonEmpty)
-    Thread.sleep(1100)
-
-    writeDoc(src, "c_3.pdf", "gamma") // pdf shard only
-    assert(loader.pollOnce() === Some(2L))
-    // the docx partition was neither reprocessed nor rewritten
-    assert(partFiles(s"$wh/ext=docx") === docxBefore)
-    val t = loader.currentTable().get
-    assert(t.count() === 3)
-    // incremental: ONLY the new file carries the new upload id
-    assert(t.filter(col("UPLOAD_ID") === 2L).select("path").as[String]
-      .collect().toSeq === Seq("c_3.pdf"))
-    // unchanged rows keep their original stamp (no reprocess-all)
-    assert(t.filter(col("path") === "a_1.pdf").select("UPLOAD_ID")
-      .as[Long].head() === 1L)
-  }
-
   test("checkpointed streaming restart: a fresh loader resuming from the " +
     "same checkpoint continues upload ids and the merge stays idempotent") {
     val src = Files.createTempDirectory("graft_src6").toString
@@ -237,7 +106,7 @@ class WatcherSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("graft_ckpt6").toString
     def await(label: String, q: org.apache.spark.sql.streaming.StreamingQuery,
               cond: => Boolean, ms: Long = 120000): Unit = {
-      // tolerate transient failures (reading a table mid-swap)
+      // tolerate transient failures (a read racing a commit)
       var lastErr: Option[Throwable] = None
       def ok = scala.util.Try(cond) match {
         case scala.util.Success(v) => v
@@ -286,17 +155,9 @@ class WatcherSpec extends SparkSpec {
     "is linear") {
     val src = Files.createTempDirectory("graft_src_tx").toString
     val wh = Files.createTempDirectory("graft_wh_tx").toString + "/docs"
-    def mk() = new Watcher.IncrementalLoader(
-      spark, src, wh, keys = Seq("doc_id"),
-      process = (files, uploadId) => files.select(
-        regexp_extract(col("path"), "_(\\d+)\\.", 1).cast("long")
-          .as("doc_id"),
-        length(col("content")).cast("long").as("n_bytes"),
-        lit(uploadId).as("UPLOAD_ID")),
-      useTxLog = true)
     writeDoc(src, "a_1.pdf", "alpha")
     writeDoc(src, "b_2.docx", "beta")
-    val loader = mk()
+    val loader = mkLoader(src, wh)
     assert(loader.pollOnce() === Some(1L))
     assert(TxLog.currentVersion(spark, wh) === 1L)
     assert(TxLog.commitEpoch(spark, wh, 1L) === Some(1L))
@@ -313,7 +174,7 @@ class WatcherSpec extends SparkSpec {
     // restart: a FRESH loader recovers the upload id from the LOG's
     // epoch tags (not from rows), resumes at 2, and the survivors of
     // the next poll merge idempotently — no duplicates
-    val restarted = mk()
+    val restarted = mkLoader(src, wh)
     assert(restarted.lastUploadId === 1L)
     Thread.sleep(1100) // mtime resolution
     writeDoc(src, "c_3.pdf", "gamma")
@@ -344,15 +205,8 @@ class WatcherSpec extends SparkSpec {
     "recovers the id from the log, replays skip") {
     val src = Files.createTempDirectory("graft_src_txp").toString
     val wh = Files.createTempDirectory("graft_wh_txp").toString + "/docs"
-    def mk() = new Watcher.IncrementalLoader(
-      spark, src, wh, keys = Seq("doc_id"),
-      process = (files, uploadId) => files.select(
-        regexp_extract(col("path"), "_(\\d+)\\.", 1).cast("long")
-          .as("doc_id"),
-        regexp_extract(col("path"), "\\.(\\w+)$", 1).as("ext"),
-        length(col("content")).cast("long").as("n_bytes"),
-        lit(uploadId).as("UPLOAD_ID")),
-      partitionCol = Some("ext"), incremental = true, useTxLog = true)
+    def mk() = mkLoader(src, wh, partitionCol = Some("ext"),
+      incremental = true)
     writeDoc(src, "a_1.pdf", "alpha")
     writeDoc(src, "b_2.docx", "beta")
     val loader = mk()
@@ -368,7 +222,14 @@ class WatcherSpec extends SparkSpec {
     assert(loader.pollOnce() === Some(2L))
     assert(docxFiles.subsetOf(
       TxLog.snapshot(spark, wh).files.map(_.path).toSet))
-    assert(loader.currentTable().get.count() === 3)
+    val t2 = loader.currentTable().get
+    assert(t2.count() === 3)
+    // incremental: ONLY the new file carries the new upload id
+    assert(t2.filter(col("UPLOAD_ID") === 2L).select("doc_id").as[Long]
+      .collect().toSeq === Seq(3L))
+    // unchanged rows keep their original stamp (no reprocess-all)
+    assert(t2.filter(col("doc_id") === 1L).select("UPLOAD_ID")
+      .as[Long].head() === 1L)
     // restart: epoch recovered from the log; the fresh loader's first
     // poll reprocesses all files and merges idempotently — no dups
     val restarted = mk()
@@ -396,15 +257,7 @@ class WatcherSpec extends SparkSpec {
     "replay detection") {
     val src = Files.createTempDirectory("graft_src_txc").toString
     val wh = Files.createTempDirectory("graft_wh_txc").toString + "/docs"
-    def mk() = new Watcher.IncrementalLoader(
-      spark, src, wh, keys = Seq("doc_id"),
-      process = (files, uploadId) => files.select(
-        regexp_extract(col("path"), "_(\\d+)\\.", 1).cast("long")
-          .as("doc_id"),
-        length(col("content")).cast("long").as("n_bytes"),
-        lit(uploadId).as("UPLOAD_ID")),
-      useTxLog = true)
-    val loader = mk()
+    val loader = mkLoader(src, wh)
     (1 to 4).foreach { i =>
       writeDoc(src, s"f_$i.pdf", "x" * i)
       Thread.sleep(1100) // mtime resolution between polls
@@ -424,7 +277,7 @@ class WatcherSpec extends SparkSpec {
     // the compaction commit carries no epoch tag, and a restarted
     // loader still recovers upload id 4 from the newest TAGGED manifest
     assert(TxLog.commitEpoch(spark, wh, 5L) === None)
-    val restarted = mk()
+    val restarted = mkLoader(src, wh)
     assert(restarted.lastUploadId === 4L)
     // replay of epoch 4 after compaction: still detected, still skipped
     assert(TxLog.mergeEpoch(spark, wh,
@@ -493,13 +346,7 @@ class WatcherSpec extends SparkSpec {
     val wh = Files.createTempDirectory("graft_wh_tl").toString + "/docs"
     writeDoc(src, "a_1.pdf", "alpha")
     writeDoc(src, "b_2.docx", "beta")
-    val loader = new Watcher.IncrementalLoader(
-      spark, src, wh, keys = Seq("path"),
-      process = (files, uploadId) => files.select(
-        regexp_extract(col("path"), "([^/]+)$", 1).as("path"),
-        length(col("content")).as("n_bytes"),
-        lit(uploadId).as("UPLOAD_ID")),
-      tableListing = true)
+    val loader = mkLoader(src, wh, tableListing = true)
 
     assert(loader.pollOnce() === Some(1L)) // first-iteration force
     assert(loader.pollOnce() === None)     // unchanged -> one count, no batch
@@ -515,10 +362,10 @@ class WatcherSpec extends SparkSpec {
     val wh2 = Files.createTempDirectory("graft_wh_tl2").toString + "/docs"
     val mapLoader = mkLoader(src, wh2)
     assert(mapLoader.pollOnce() === Some(1L))
-    val a = t.select("path", "n_bytes").orderBy("path")
+    val a = t.select("doc_id", "n_bytes").orderBy("doc_id")
       .collect().map(_.toSeq).toSeq
-    val b = mapLoader.currentTable().get.select("path", "n_bytes")
-      .orderBy("path").collect().map(_.toSeq).toSeq
+    val b = mapLoader.currentTable().get.select("doc_id", "n_bytes")
+      .orderBy("doc_id").collect().map(_.toSeq).toSeq
     assert(a === b)
   }
 
@@ -530,13 +377,7 @@ class WatcherSpec extends SparkSpec {
     val wh = Files.createTempDirectory("graft_wh_co").toString + "/docs"
     writeDoc(src, "a_1.pdf", "alpha")
     writeDoc(src, "b_2.docx", "beta")
-    val loader = new Watcher.IncrementalLoader(
-      spark, src, wh, keys = Seq("path"),
-      process = (files, uploadId) => files.select(
-        regexp_extract(col("path"), "([^/]+)$", 1).as("path"),
-        length(col("content")).as("n_bytes"),
-        lit(uploadId).as("UPLOAD_ID")),
-      listingCutover = 3L)
+    val loader = mkLoader(src, wh, listingCutover = 3L)
     // below the threshold: Map mode, nothing persisted
     assert(loader.pollOnce() === Some(1L))
     assert(loader.pollOnce() === None)
@@ -589,14 +430,6 @@ class WatcherSpec extends SparkSpec {
     "reference's single-writer semantics (script.py:60-117) end to end") {
     val src = Files.createTempDirectory("graft_src_dd").toString
     val wh = Files.createTempDirectory("graft_wh_dd").toString + "/docs"
-    def mk() = new Watcher.IncrementalLoader(
-      spark, src, wh, keys = Seq("doc_id"),
-      process = (files, uploadId) => files.select(
-        regexp_extract(col("path"), "_(\\d+)\\.", 1).cast("long")
-          .as("doc_id"),
-        length(col("content")).cast("long").as("n_bytes"),
-        lit(uploadId).as("UPLOAD_ID")),
-      useTxLog = true)
     def await(label: String, cond: => Boolean, ms: Long = 120000): Unit = {
       // tolerate transient mid-commit reads
       def ok = scala.util.Try(cond).getOrElse(false)
@@ -612,7 +445,7 @@ class WatcherSpec extends SparkSpec {
     val prevProvider = TxLog.logStoreProvider
     TxLog.logStoreProvider = _ => graft.engine.LogStore.ConditionalPut
     try {
-      val (w1, w2) = (mk(), mk())
+      val (w1, w2) = (mkLoader(src, wh), mkLoader(src, wh))
       val (q1, q2) = (w1.start(1), w2.start(1))
       try {
         // both watchers observe the first snapshot and race epoch 1:
@@ -658,14 +491,7 @@ class WatcherSpec extends SparkSpec {
     import org.scalacheck.Gen
     val src = Files.createTempDirectory("graft_src_soak").toString
     val wh = Files.createTempDirectory("graft_wh_soak").toString + "/docs"
-    val loader = new Watcher.IncrementalLoader(
-      spark, src, wh, keys = Seq("doc_id"),
-      process = (files, uploadId) => files.select(
-        regexp_extract(col("path"), "_(\\d+)\\.", 1).cast("long")
-          .as("doc_id"),
-        length(col("content")).cast("long").as("n_bytes"),
-        lit(uploadId).as("UPLOAD_ID")),
-      useTxLog = true)
+    val loader = mkLoader(src, wh)
     // deterministic ScalaCheck drawing (no wall-clock randomness) and
     // an EXPLICIT mtime clock — change detection is mtime-based, and
     // sleeping past filesystem mtime resolution 200 times would blow
@@ -754,5 +580,55 @@ class WatcherSpec extends SparkSpec {
     Seq(1L, polls / 2, polls).foreach { v =>
       assert(TxLog.snapshot(spark, wh, Some(v)).version === v)
     }
+  }
+
+  test("bounded retry: a poll that fails once commits on the next tick; " +
+    "a poll that always fails terminates the heartbeat query after " +
+    "MaxFailedPolls ticks with the error in StreamingQuery.exception") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.sql.streaming.StreamingQueryException
+    val src = Files.createTempDirectory("graft_src_br").toString
+    writeDoc(src, "a_1.pdf", "alpha")
+    def loader(wh: String, calls: AtomicInteger, failures: Int) =
+      new Watcher.IncrementalLoader(spark, src, wh, Seq("doc_id"),
+        (files, uploadId) =>
+          if (calls.incrementAndGet() <= failures)
+            throw new RuntimeException(s"boom ${calls.get}")
+          else files.select(
+            regexp_extract(col("path"), "_(\\d+)\\.", 1).cast("long")
+              .as("doc_id"),
+            lit(uploadId).as("UPLOAD_ID")))
+
+    // transient: the first poll throws, the next tick commits epoch 1
+    val flaky = new AtomicInteger
+    val wh1 = Files.createTempDirectory("graft_wh_br1").toString + "/docs"
+    val l1 = loader(wh1, flaky, failures = 1)
+    val q1 = l1.start(intervalSeconds = 1)
+    try {
+      val t0 = System.currentTimeMillis()
+      while (l1.lastUploadId < 1L && q1.isActive &&
+          System.currentTimeMillis() - t0 < 120000) Thread.sleep(200)
+      assert(l1.lastUploadId === 1L, s"exception=${q1.exception}")
+      assert(q1.isActive && q1.exception.isEmpty)
+      assert(flaky.get === 2)
+      assert(TxLog.commitEpoch(spark, wh1, 1L) === Some(1L))
+    } finally q1.stop()
+
+    // permanent: every poll throws; the query stops at the bound
+    val broken = new AtomicInteger
+    val wh2 = Files.createTempDirectory("graft_wh_br2").toString + "/docs"
+    val q2 = loader(wh2, broken, failures = Int.MaxValue)
+      .start(intervalSeconds = 1)
+    try {
+      val e = intercept[StreamingQueryException](q2.awaitTermination(120000))
+      // the last poll's own error, possibly under Spark's foreachBatch
+      // wrapper
+      val causes = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(_.getMessage).toSeq
+      assert(causes.contains(s"boom ${Watcher.MaxFailedPolls}"), causes)
+      assert(q2.exception.isDefined)
+      assert(broken.get === Watcher.MaxFailedPolls)
+      assert(TxLog.currentVersion(spark, wh2) === 0L)
+    } finally q2.stop()
   }
 }
